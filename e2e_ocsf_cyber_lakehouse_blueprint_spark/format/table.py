@@ -23,7 +23,7 @@ import re
 import json
 import os
 import uuid
-from typing import Any, Sequence
+from typing import Any, Callable, Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -757,6 +757,7 @@ class Table:
         sort_within: Sequence[str] | None = None,
         job_tag: str = "append",
         harvest_key_stats: bool | None = None,
+        after_exchange: Callable[[DataFrame], DataFrame] | None = None,
     ) -> list[DataFile]:
         """Write df as data files under this table's location; return stat'd entries.
 
@@ -777,7 +778,12 @@ class Table:
         bounds-only (wide lexical bounds on curve files prune nothing)
         until the next clustering pass. Row-delta upserts pass True because
         their batch-sized files sit on every scan's read path until
-        MAINTAIN folds them."""
+        MAINTAIN folds them.
+
+        ``after_exchange`` transforms the frame after the pre-write exchange
+        (if any) and before the within-partition sort — the one place an
+        ``Observation`` sees every written row exactly once, since a range
+        exchange's sampling job re-runs everything below it."""
         spec = self.spec
         out = df
         if spec.fields:
@@ -790,6 +796,8 @@ class Table:
                 out = out.repartitionByRange(n_files, *sort_within)
             else:
                 out = out.repartition(n_files)
+        if after_exchange is not None:
+            out = after_exchange(out)
         if sort_within:
             out = out.sortWithinPartitions(*(spec.column_names + list(sort_within)))
         staging = os.path.join(

@@ -33,7 +33,7 @@ from .compaction import (
     run_grouped_rewrites,
     write_group_global_range,
 )
-from .ledger import Ledger, partition_key, spill_metrics, split_size_for_rewrites
+from .ledger import Ledger, partition_key, split_size_for_rewrites
 from ..timing import phase_timer
 
 _KEY_COL = "_zkey"
@@ -50,7 +50,6 @@ class ClusteringResult:
     bytes_in: int
     skipped_resume: int = 0
     elapsed_sec: float = 0.0
-    spill_bytes: int = 0
     # files left in place because their manifest entry already carries the
     # current sort spec (incremental / liquid clustering)
     files_skipped_clustered: int = 0
@@ -252,6 +251,5 @@ class ClusteringJob:
             bytes_in=sum(f.file_size_bytes for f in all_files),
             skipped_resume=skipped,
             elapsed_sec=time.time() - t0,
-            spill_bytes=spill_metrics(self.table.spark),
             files_skipped_clustered=self._skipped_clustered,
         )

@@ -38,7 +38,7 @@ from ..format.stats import (
     harvest_file_stats, layout_bloom_cols, layout_hash_cols,
 )
 from ..format.table import Table
-from .ledger import Ledger, partition_key, spill_metrics, split_size_for_rewrites
+from .ledger import Ledger, partition_key, split_size_for_rewrites
 from ..timing import ENABLED as TIMING_ON, phase_timer
 import sys
 
@@ -443,7 +443,6 @@ def run_grouped_rewrites(
         by_part: dict[str, list[DataFile]] = {}
         for f in files:
             by_part.setdefault(partition_key(f.partition), []).append(f)
-        spill = spill_metrics(spark)
         resumed_keys = {p.key for p, _, _ in resumed_staged}
         for plan, d, started in staged:
             # scope to THIS plan's staging dir: a resumed group dir can hold a
@@ -466,7 +465,7 @@ def run_grouped_rewrites(
                 plan.partition, [f.path for f in plan.input_files], outs,
                 rows=sum(f.record_count for f in outs),
                 bytes_written=sum(f.file_size_bytes for f in outs),
-                spill_bytes=spill, started_ms=started,
+                started_ms=started,
             )
             results.append((plan, outs, plan.key in resumed_keys))
     return results
@@ -494,7 +493,6 @@ class CompactionResult:
     bytes_out: int
     skipped_resume: int = 0
     elapsed_sec: float = 0.0
-    spill_bytes: int = 0
 
 
 def deleted_rows_by_file(table: Table) -> dict[str, int]:
@@ -674,5 +672,4 @@ class CompactionJob:
             bytes_out=sum(f.file_size_bytes for f in added),
             skipped_resume=skipped,
             elapsed_sec=time.time() - t0,
-            spill_bytes=spill_metrics(self.table.spark),
         )

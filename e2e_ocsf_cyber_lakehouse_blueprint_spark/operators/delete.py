@@ -19,9 +19,12 @@ classic three-way file classification that makes predicate deletes cheap at
      the predicate is TRUE — UNKNOWN/NULL rows survive, matching Spark/Delta
      ``DELETE``), and written back at target file size.
 
-Atomicity / isolation: identical to MERGE — new files staged first, one
-copy-on-write snapshot (operation="delete") swaps the affected set, pinned
-readers keep the old snapshot, a pre-commit crash leaves only GC-able orphans.
+The rewrite, its row count and the commit are the shared row-level
+primitive (``operators/rewrite.py``, also behind UPDATE and MERGE): new files
+staged first, one copy-on-write snapshot (operation="delete") swaps the
+affected set, pinned readers keep the old snapshot, a pre-commit crash leaves
+only GC-able orphans. ``rows_deleted`` counts rows that actually leave the
+scan: rows already masked by earlier delete files are not counted again.
 
 Predicates are the engine's conjunctive triples (``plans/pruning.py``):
 ``(column, op, value)`` with op in ``= < <= > >= in notnull isnull``.
@@ -34,13 +37,16 @@ from dataclasses import dataclass
 from typing import Sequence
 
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from ..format.manifest import DataFile
-from ..format.stats import inputs_carry_key_stats
 from ..format.table import Table
-from ..plans.pruning import Predicate, prune_files
-from .ledger import Ledger, partition_key, spill_metrics, split_size_for_rewrites
+from ..plans.pruning import Predicate, covers_bounds, prune_files
+from .rewrite import (
+    commit_with_lineage, live_row_count, rewrite_rows, start_sequence,
+)
+
+# tag column: the row matches the predicate (counted, then not written)
+_HIT = "_delete_hit"
 
 
 @dataclass
@@ -53,23 +59,9 @@ class DeleteResult:
     files_written: int
     rows_deleted: int
     elapsed_sec: float = 0.0
-    spill_bytes: int = 0
     mode: str = "copy-on-write"
     files_marked: int = 0       # merge-on-read: data files covered by new DVs
     delete_files_written: int = 0
-
-
-def _all_rows_match(f: DataFile, col: str, op: str, value,
-                    dtype: T.DataType | None,
-                    alias_names=None) -> bool:
-    """True only when the stats PROVE every row of ``f`` satisfies the
-    predicate — delegates to the shared full-match dual in plans/pruning.py
-    (:func:`covers_bounds`), which is also what metadata-only aggregation
-    uses. Missing stats -> False (the file is rewritten; correctness never
-    depends on stats, mirroring the read-side pruner)."""
-    from ..plans.pruning import covers_bounds
-
-    return covers_bounds(f, col, op, value, dtype, alias_names)
 
 
 def write_posdel_files(table: Table, marks: DataFrame,
@@ -221,33 +213,6 @@ def equality_delete(table: Table, keys: "DataFrame") -> DeleteResult:
     )
 
 
-def record_rewrite_lineage(table: Table, job_type: str, snap,
-                           removed: list[DataFile], outs: list[DataFile]) -> None:
-    """Per-partition input->output lineage for a copy-on-write rewrite commit
-    (the audit ledger contract shared by DELETE and UPDATE)."""
-    job_id = f"{job_type}-{snap.parent_snapshot_id or 0}-{snap.snapshot_id}"
-    ledger = Ledger(table.location, job_id, job_type)
-    by_part_in: dict[str, list[str]] = {}
-    part_of: dict[str, dict] = {}
-    for f in removed:
-        k = partition_key(f.partition)
-        by_part_in.setdefault(k, []).append(f.path)
-        part_of.setdefault(k, f.partition)
-    by_part_out: dict[str, list[DataFile]] = {}
-    for f in outs:
-        by_part_out.setdefault(partition_key(f.partition), []).append(f)
-        part_of.setdefault(partition_key(f.partition), f.partition)
-    for k in sorted(set(by_part_in) | set(by_part_out)):
-        po = by_part_out.get(k, [])
-        ledger.record_partition(
-            part_of[k], by_part_in.get(k, []), po,
-            rows=sum(f.record_count for f in po),
-            bytes_written=sum(f.file_size_bytes for f in po),
-            spill_bytes=0,
-        )
-    ledger.record_job_done({"snapshot_id": snap.snapshot_id})
-
-
 class DeleteJob:
     """``DELETE FROM table WHERE <conjunction>`` as a resumable-commit job."""
 
@@ -283,7 +248,7 @@ class DeleteJob:
         dropped, rewrite = [], []
         for f in candidates:
             if f.record_count and all(
-                _all_rows_match(f, col, op, v, dtypes.get(col), names.get(col))
+                covers_bounds(f, col, op, v, dtypes.get(col), names.get(col))
                 for col, op, v in self.predicates
             ):
                 dropped.append(f)
@@ -294,63 +259,32 @@ class DeleteJob:
     def run(self) -> DeleteResult:
         t0 = time.time()
         table = self.table
-        table.refresh()
-        start = table.current_snapshot()
-        start_seq = start.sequence_number if start else None
+        start_seq = start_sequence(table)
         untouched, dropped, rewrite = self.classify()
         n_total = len(untouched) + len(dropped) + len(rewrite)
         if not dropped and not rewrite:
             return DeleteResult(None, n_total, n_total, 0, 0, 0, 0,
-                                time.time() - t0, 0)
-        spark = table.spark
-        schema = table.schema
+                                time.time() - t0)
         if self.mode == "merge-on-read":
             return self._run_mor(untouched, dropped, rewrite, t0, start_seq)
-        outs: list[DataFile] = []
-        pred = table._residual(self.predicates)
-        if rewrite:
-            # MAP-ONLY rewrite (Iceberg's copy-on-write shape): each scan
-            # task filters its own files, locally sorts on the layout keys
-            # (filtering preserves existing order, so a clustered input is
-            # an almost-sorted no-op), and writes its own outputs — NO
-            # exchange of the surviving rows. Splits are aligned to the
-            # target file size so outputs mirror inputs ~1:1 minus the
-            # deleted rows; a later compaction re-packs stragglers. At
-            # 100 TB this is the difference between an embarrassingly
-            # parallel rewrite and shuffling every surviving row of the
-            # touched partitions through a repartition.
-            target_size = table.property_int(
-                "write.target-file-size-bytes", 128 * 1024 * 1024)
-            with split_size_for_rewrites(spark, target_size):
-                df = table.read_data_files(rewrite)
-                # delete iff predicate is TRUE; UNKNOWN (NULL) rows are kept
-                survivors = df.filter(~F.coalesce(pred, F.lit(False)))
-                outs = table.write_data_files(
-                    survivors, n_files=None,
-                    sort_within=self.sort_keys or None, job_tag="delete",
-                    harvest_key_stats=inputs_carry_key_stats(rewrite),
-                )
-
+        # delete iff predicate is TRUE; UNKNOWN (NULL) rows are kept
+        pred = F.coalesce(table._residual(self.predicates), F.lit(False))
+        # capture BEFORE the commit: the rewrite may retire the delete files
+        n_dropped_live = live_row_count(table, dropped)
         cdir = self._write_cdf(dropped, rewrite, pred)
-        removed = dropped + rewrite
-        n_in = sum(f.record_count for f in removed)
-        n_out = sum(f.record_count for f in outs)
-        summary = {
-            "job": "delete",
-            "predicates": " AND ".join(
-                f"{c} {op} {v!r}" for c, op, v in self.predicates),
-            "deleted-records": n_in - n_out,
-            "dropped-whole-files": len(dropped),
-        }
-        if cdir:
-            summary["change-data-dir"] = cdir
-        snap = table.commit_rewrite(
-            [f.path for f in removed], outs, operation="delete",
-            summary_extra=summary, starting_sequence_number=start_seq,
+        # MAP-ONLY rewrite (Iceberg's copy-on-write shape): each scan task
+        # counts and drops its own matching rows and writes its outputs ~1:1
+        # with its inputs; a later compaction re-packs stragglers
+        snap, outs, counts = rewrite_rows(
+            table, rewrite, lambda df: df.withColumn(_HIT, pred),
+            counters={"deleted": F.count_if(F.col(_HIT))},
+            keep=~F.col(_HIT), dropped=dropped,
+            job="delete", operation="delete", sort_keys=self.sort_keys,
+            start_seq=start_seq,
+            summary=lambda n: self._summary(
+                cdir, deleted=n_dropped_live + n["deleted"],
+                dropped=len(dropped)),
         )
-
-        record_rewrite_lineage(table, "delete", snap, removed, outs)
-
         return DeleteResult(
             snapshot_id=snap.snapshot_id,
             files_total=n_total,
@@ -358,26 +292,37 @@ class DeleteJob:
             files_dropped=len(dropped),
             files_rewritten=len(rewrite),
             files_written=len(outs),
-            rows_deleted=n_in - n_out,
+            rows_deleted=n_dropped_live + counts["deleted"],
             elapsed_sec=time.time() - t0,
-            spill_bytes=spill_metrics(spark),
         )
+
+    def _summary(self, cdir: str | None, *, deleted: int,
+                 dropped: int) -> dict:
+        return {
+            "job": "delete",
+            "predicates": " AND ".join(
+                f"{c} {op} {v!r}" for c, op, v in self.predicates),
+            "deleted-records": deleted,
+            "dropped-whole-files": dropped,
+            "change-data-dir": cdir,
+        }
 
     def _write_cdf(self, dropped: list[DataFile], rewrite: list[DataFile],
                    pred) -> str | None:
         """Change-data-feed rows for this DELETE (when enabled): the matched
         rows of straddling files plus every live row of whole-dropped files,
         typed ``delete``. Costs one extra filtered scan of ONLY the affected
-        files — reconstructing victims read-side would be a full-table diff."""
+        files — reconstructing victims read-side would be a full-table diff.
+        ``read_data_files`` applies the PRIOR delete files, so the scan yields
+        exactly the rows this commit newly deletes."""
         from .change_feed import CHANGE_TYPE_COL, cdf_enabled, write_change_data
 
         table = self.table
-        if not cdf_enabled(table) or not (dropped or rewrite):
+        if not cdf_enabled(table):
             return None
         parts = []
         if rewrite:
-            parts.append(table.read_data_files(rewrite)
-                         .filter(F.coalesce(pred, F.lit(False))))
+            parts.append(table.read_data_files(rewrite).filter(pred))
         if dropped:
             parts.append(table.read_data_files(dropped))
         ch = parts[0]
@@ -388,7 +333,7 @@ class DeleteJob:
 
     def _run_mor(self, untouched: list[DataFile], dropped: list[DataFile],
                  straddling: list[DataFile], t0: float,
-                 start_seq: int | None = None) -> DeleteResult:
+                 start_seq: int | None) -> DeleteResult:
         """Merge-on-read: matching rows in straddling files are MARKED in a
         positional-delete (deletion-vector) file — (file_path, pos) rows
         keyed by ``_metadata`` — instead of rewriting data. Provably
@@ -399,19 +344,18 @@ class DeleteJob:
         table = self.table
         spark = table.spark
         n_total = len(untouched) + len(dropped) + len(straddling)
-        dels = table.live_delete_files()
+        pred = F.coalesce(table._residual(self.predicates), F.lit(False))
         outs: list[DataFile] = []
         n_marked = 0
         if straddling:
-            pred = table._residual(self.predicates)
             raw = table.read_parquet([f.path for f in straddling],
                                      filepos=("file_path", "pos"))
-            marks = (raw.filter(F.coalesce(pred, F.lit(False)))
-                        .select("file_path", "pos"))
+            marks = raw.filter(pred).select("file_path", "pos")
             # never re-mark rows an existing DV already deletes (keeps DV row
             # sets disjoint, so counts add and scans can union DVs blindly)
-            prior = [d for d in dels
-                     if {f.path for f in straddling}.intersection(d.covered_paths)]
+            paths = {f.path for f in straddling}
+            prior = [d for d in table.live_delete_files()
+                     if paths.intersection(d.covered_paths)]
             if prior:
                 existing = (spark.read.parquet(*[d.path for d in prior])
                             .select("file_path", "pos"))
@@ -421,31 +365,19 @@ class DeleteJob:
                 self.table, marks, max(1, len(straddling) // 64))
             n_marked = sum(f.record_count for f in outs)
 
-        n_dropped_live = (sum(f.record_count for f in dropped)
-                          - table.deleted_row_count(dropped, dels))
         if not dropped and not outs:
             return DeleteResult(None, n_total, n_total, 0, 0, 0, 0,
-                                time.time() - t0, 0, mode=self.mode)
-        # CDF: read_data_files applies the PRIOR DVs, so the filtered scan
-        # yields exactly the rows this commit newly deletes
-        cdir = self._write_cdf(dropped, straddling,
-                               table._residual(self.predicates))
-        summary = {
-            "job": "delete",
-            "mode": "merge-on-read",
-            "predicates": " AND ".join(
-                f"{c} {op} {v!r}" for c, op, v in self.predicates),
-            "deleted-records": n_dropped_live + n_marked,
-            "dropped-whole-files": len(dropped),
-            "delete-files-written": len(outs),
-        }
-        if cdir:
-            summary["change-data-dir"] = cdir
-        snap = table.commit_rewrite(
-            [f.path for f in dropped], outs, operation="delete",
-            summary_extra=summary, starting_sequence_number=start_seq,
+                                time.time() - t0, mode=self.mode)
+        n_deleted = live_row_count(table, dropped) + n_marked
+        cdir = self._write_cdf(dropped, straddling, pred)
+        snap = commit_with_lineage(
+            table, dropped, outs, job="delete", operation="delete",
+            summary={**self._summary(cdir, deleted=n_deleted,
+                                     dropped=len(dropped)),
+                     "mode": "merge-on-read",
+                     "delete-files-written": len(outs)},
+            start_seq=start_seq,
         )
-        record_rewrite_lineage(table, "delete", snap, dropped, outs)
         covered = set()
         for d in outs:
             covered.update(d.covered_paths)
@@ -456,9 +388,8 @@ class DeleteJob:
             files_dropped=len(dropped),
             files_rewritten=0,
             files_written=0,
-            rows_deleted=n_dropped_live + n_marked,
+            rows_deleted=n_deleted,
             elapsed_sec=time.time() - t0,
-            spill_bytes=spill_metrics(spark),
             mode=self.mode,
             files_marked=len(covered),
             delete_files_written=len(outs),

@@ -20,7 +20,7 @@ import json
 import os
 import threading
 import time
-from typing import Any, Iterable
+from typing import Any
 
 from ..format.manifest import DataFile
 
@@ -206,27 +206,3 @@ class split_size_for_rewrites:
                 # silently cap scan parallelism)
                 self.spark.conf.unset(k)
         return False
-
-
-def spill_metrics(spark) -> int:
-    """Best-effort shuffle/sort spill bytes via the Spark UI REST API.
-
-    Returns 0 when the UI is disabled (tests) — on a cluster deploy the UI/
-    history server is the canonical source for memoryBytesSpilled/
-    diskBytesSpilled and this picks them up without code changes.
-    """
-    try:
-        import urllib.request
-
-        base = spark.sparkContext.uiWebUrl
-        if not base:
-            return 0
-        app_id = spark.sparkContext.applicationId
-        with urllib.request.urlopen(f"{base}/api/v1/applications/{app_id}/stages", timeout=2) as r:
-            stages = json.loads(r.read().decode())
-        return sum(
-            int(s.get("memoryBytesSpilled", 0)) + int(s.get("diskBytesSpilled", 0))
-            for s in stages
-        )
-    except Exception:
-        return 0

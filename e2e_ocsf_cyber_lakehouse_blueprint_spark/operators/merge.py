@@ -19,7 +19,10 @@ Scale design (SURVEY.md §2.3):
   keep) rather than one full-outer — each leg shuffles on the same keys (AQE
   reuses the exchange) and each leg tolerates salting, which full-outer does
   not.
-- **Atomicity**: new files staged first; one copy-on-write snapshot swaps
+- **Write, counters, commit**: the row-level primitive shared with DELETE
+  and UPDATE (operators/rewrite.py) — the legs are tagged, range-partitioned
+  into target-size files, and counted (kept / updated / inserted) by one
+  Observation in the write's own Spark job; one copy-on-write snapshot swaps
   affected files. A crash before commit leaves the table untouched (staged
   files become orphans for GC); rerunning from the same source is idempotent.
 - **Dedup**: duplicate source keys resolve last-writer-wins by ``ts`` before
@@ -37,9 +40,11 @@ from pyspark.sql import functions as F
 
 from ..format.manifest import DataFile, decode_bound
 from ..format.table import Table
-from ..format.stats import inputs_carry_key_stats
-from .ledger import Ledger, partition_key, spill_metrics
+from .rewrite import live_row_count, rewrite_rows, start_sequence
 from .skew import salted_join
+
+# tag column: the leg of a written row (0 kept, 1 updated, 2 inserted)
+_LEG = "_merge_leg"
 
 
 @dataclass
@@ -53,7 +58,6 @@ class MergeResult:
     rows_inserted: int
     rows_copied: int
     elapsed_sec: float = 0.0
-    spill_bytes: int = 0
 
 
 _SCOPABLE_EXTRA_TYPES = {"tinyint", "smallint", "int", "bigint", "string"}
@@ -304,86 +308,19 @@ class MergeIntoJob:
             ch = ch.unionByName(ins.withColumn(CHANGE_TYPE_COL, F.lit("insert")))
         return write_change_data(self.table, ch)
 
-    def run(self, source: DataFrame) -> MergeResult:
-        t0 = time.time()
-        table = self.table
-        table.refresh()
-        snapshot = table.current_snapshot()
-        schema = table.schema
-        cols = [f.name for f in schema.fields]
-        # a per-column-SET / DELETE merge may take a NARROW source (keys +
-        # referenced columns); legs that materialize full rows from the
-        # source still demand the whole schema
-        avail = [c for c in cols if c in source.columns]
-        missing = [c for c in cols if c not in source.columns]
-        if missing:
-            needs_full = (self.when_not_matched == "insert"
-                          or (self.when_matched == "update"
-                              and self.update_set is None))
-            if needs_full:
-                raise ValueError(
-                    f"MERGE source is missing table columns {missing} — "
-                    "INSERT * and UPDATE SET * need the full row; use "
-                    "per-column SET (and drop the INSERT clause) for a "
-                    "narrow source")
-            missing_keys = [k for k in self.key_cols if k not in avail]
-            if missing_keys:
-                raise ValueError(f"MERGE source lacks key columns {missing_keys}")
-        source = self._dedup_source(source.select(*avail))
-
-        files_all = table.live_data_files()
-        # scoping strategy by table size: the driver-side bounds join is
-        # cheapest to ~10^5 files; past the threshold the manifest decode and
-        # bounds join run executor-side and only the HIT paths (bounded by
-        # the merge's blast radius) return to the driver
-        scope_threshold = table.property_int(
-            "merge.scope.distributed-min-files", 100_000)
-        if len(files_all) > scope_threshold:
-            hit_paths = scope_paths_distributed(table, source, self.key_cols)
-            affected = [f for f in files_all if f.path in hit_paths]
-        else:
-            affected, _untouched = _scope_files(table, source, self.key_cols)
-        affected = _bloom_filter_affected(affected, source, self.key_cols[0])
-        spark = table.spark
-
-        # read through the table so outstanding deletion vectors are applied
-        # (and thereby folded into the rewritten files)
-        tgt = table.read_data_files(affected)
-
-        # salting auto-derives from persisted ANALYZE frequency stats when
-        # not set explicitly (0 disables): the one tuning knob the round-3
-        # plan left manual. suggest_salt_buckets returns None unless the
-        # hottest key dwarfs an average shuffle partition, so unskewed
-        # tables keep the plain exchange-reusing plan.
-        salt = self.salt_buckets
-        if salt is None:
-            from ..plans.costs import suggest_salt_buckets
-            salt = suggest_salt_buckets(table, self.key_cols[0])
-        self._resolved_salt = salt
-
-        # metadata-driven broadcast: the affected files' LIVE row count is
-        # exact manifest arithmetic, and the update join only needs the key
-        # projection of the target — when those keys fit the session
-        # broadcast threshold, hint it so the (possibly huge) source never
-        # shuffles for the matched leg. Catalyst's own size estimate can't
-        # see this: it prices the full-width file scan, not the projection.
-        from ..plans.costs import parse_size
-        n_tgt_rows = (sum(f.record_count for f in affected)
-                      - table.deleted_row_count(affected))
-        key_width = 32 * len(self.key_cols)
-        thr = parse_size(
-            table.spark.conf.get("spark.sql.autoBroadcastJoinThreshold",
-                                 "10MB"))
-        bcast_keys = thr > 0 and n_tgt_rows * key_width <= thr
-
-        # 3-way merge (exchange-reused shuffles on the same keys)
+    def _legs(self, tgt: DataFrame, source: DataFrame, cols: list[str],
+              salt: int | None, bcast_keys: bool):
+        """(keep, upd, ins, pre) legs of the 3-way merge over the masked
+        target read ``tgt`` — exchange-reused shuffles on the same keys.
+        ``pre`` is the extended path's condition-filtered preimage leg (None
+        on the replace-row paths); ``ins`` is None when nothing inserts."""
         pre = None
         if self._extended:
             # per-column SET / conditional clauses need BOTH sides of each
             # matched pair in scope (t./s. qualified); same single equi-join
             # shape, AQE skew-split covers hot keys (explicit salting stays
             # on the replace-row fast path only)
-            dtypes = {f.name: f.dataType for f in schema.fields}
+            dtypes = {f.name: f.dataType for f in self.table.schema.fields}
 
             def tcol(c):
                 return F.col(c) if c in self.key_cols else F.expr(f"t.`{c}`")
@@ -434,93 +371,114 @@ class MergeIntoJob:
             keep = tgt.join(source.select(*self.key_cols), self.key_cols, "left_anti")
             ins = source.join(tgt.select(*self.key_cols), self.key_cols, "left_anti")
 
-        parts = [keep]
-        if self.when_matched == "update":
-            parts.append(upd)
-        if self.when_not_matched == "insert":
-            parts.append(ins)
-        merged = parts[0]
-        for p in parts[1:]:
-            merged = merged.unionByName(p)
-        # Delta CHECK semantics: MERGE output is written data — enforce
-        # declared constraints (no-op probe when none are declared)
-        table.check_constraints(merged)
+        return keep, upd, ins, pre
+
+    def run(self, source: DataFrame) -> MergeResult:
+        t0 = time.time()
+        table = self.table
+        start_seq = start_sequence(table)
+        schema = table.schema
+        cols = [f.name for f in schema.fields]
+        # a per-column-SET / DELETE merge may take a NARROW source (keys +
+        # referenced columns); legs that materialize full rows from the
+        # source still demand the whole schema
+        avail = [c for c in cols if c in source.columns]
+        missing = [c for c in cols if c not in source.columns]
+        if missing:
+            needs_full = (self.when_not_matched == "insert"
+                          or (self.when_matched == "update"
+                              and self.update_set is None))
+            if needs_full:
+                raise ValueError(
+                    f"MERGE source is missing table columns {missing} — "
+                    "INSERT * and UPDATE SET * need the full row; use "
+                    "per-column SET (and drop the INSERT clause) for a "
+                    "narrow source")
+            missing_keys = [k for k in self.key_cols if k not in avail]
+            if missing_keys:
+                raise ValueError(f"MERGE source lacks key columns {missing_keys}")
+        source = self._dedup_source(source.select(*avail))
+
+        files_all = table.live_data_files()
+        # scoping strategy by table size: the driver-side bounds join is
+        # cheapest to ~10^5 files; past the threshold the manifest decode and
+        # bounds join run executor-side and only the HIT paths (bounded by
+        # the merge's blast radius) return to the driver
+        scope_threshold = table.property_int(
+            "merge.scope.distributed-min-files", 100_000)
+        if len(files_all) > scope_threshold:
+            hit_paths = scope_paths_distributed(table, source, self.key_cols)
+            affected = [f for f in files_all if f.path in hit_paths]
+        else:
+            affected, _untouched = _scope_files(table, source, self.key_cols)
+        affected = _bloom_filter_affected(affected, source, self.key_cols[0])
+
+        # salting auto-derives from persisted ANALYZE frequency stats when
+        # not set explicitly (0 disables): the one tuning knob the round-3
+        # plan left manual. suggest_salt_buckets returns None unless the
+        # hottest key dwarfs an average shuffle partition, so unskewed
+        # tables keep the plain exchange-reusing plan.
+        salt = self.salt_buckets
+        if salt is None:
+            from ..plans.costs import suggest_salt_buckets
+            salt = suggest_salt_buckets(table, self.key_cols[0])
+        self._resolved_salt = salt
+
+        # metadata-driven broadcast: the affected files' LIVE row count
+        # (manifest arithmetic, less masked rows) sizes the key projection
+        # the update join needs from the target — when those keys fit the
+        # session broadcast threshold, hint it so the (possibly huge) source
+        # never shuffles for the matched leg. Catalyst's own size estimate
+        # can't see this: it prices the full-width file scan, not the
+        # projection. The same count gives WHEN MATCHED THEN DELETE its
+        # matched rows (live target rows - kept rows).
+        from ..plans.costs import parse_size
+        n_tgt = live_row_count(table, affected)
+        key_width = 32 * len(self.key_cols)
+        thr = parse_size(
+            table.spark.conf.get("spark.sql.autoBroadcastJoinThreshold",
+                                 "10MB"))
+        bcast_keys = thr > 0 and n_tgt * key_width <= thr
+        cdir = None
+
+        def transform(tgt):
+            nonlocal cdir
+            keep, upd, ins, pre = self._legs(tgt, source, cols, salt,
+                                             bcast_keys)
+            # each leg carries its tag so one in-write Observation counts
+            # kept / updated / inserted rows (the tag is not written)
+            merged = keep.withColumn(_LEG, F.lit(0))
+            if self.when_matched == "update":
+                merged = merged.unionByName(upd.withColumn(_LEG, F.lit(1)))
+            if self.when_not_matched == "insert":
+                merged = merged.unionByName(ins.withColumn(_LEG, F.lit(2)))
+            # Delta CHECK semantics: MERGE output is written data — enforce
+            # declared constraints (no-op probe when none are declared)
+            table.check_constraints(merged.drop(_LEG))
+            cdir = self._write_cdf(tgt, source, upd, ins, cols, pre=pre)
+            return merged
+
+        def matched(counts):
+            return (counts["updated"] if self.when_matched == "update"
+                    else n_tgt - counts["kept"])
 
         target_size = table.property_int("write.target-file-size-bytes", 128 * 1024 * 1024)
         bytes_affected = sum(f.file_size_bytes for f in affected) or 1
-        n_files = max(1, round(bytes_affected / target_size)) or 1
-        outs = table.write_data_files(
-            merged, n_files=n_files, sort_within=self.sort_keys, job_tag="merge",
-            harvest_key_stats=inputs_carry_key_stats(affected),
+        snap, outs, counts = rewrite_rows(
+            table, affected, transform,
+            counters={name: F.count_if(F.col(_LEG) == i) for i, name in
+                      enumerate(("kept", "updated", "inserted"))},
+            n_files=max(1, round(bytes_affected / target_size)),
+            job="merge", operation="overwrite",
+            summary=lambda n: {
+                "job": "merge", "matched": matched(n),
+                "inserted": n["inserted"],
+                "salt-buckets": str(salt) if salt else None,
+                "change-data-dir": cdir,
+            },
+            sort_keys=self.sort_keys, start_seq=start_seq,
         )
-
-        # merge stats WITHOUT a second shuffle of the target keys (the old
-        # key-only full-outer join re-shuffled every target key just for
-        # counts — a second full exchange at 100TB). The three legs partition
-        # the output, so matched/kept/inserted are linear combinations of
-        # row counts already known from METADATA (manifest record counts of
-        # the affected inputs + harvested outputs) plus ONE narrow count of
-        # the deduped source. Assumes unique keys per side (the merge
-        # invariant: source is deduped above, target by construction).
-        n_tgt = (sum(f.record_count for f in affected)
-                 - table.deleted_row_count(affected))
-        n_src = source.count()
-        n_out = sum(f.record_count for f in outs)
-        if self._extended:
-            # conditional clauses break the linear-combination shortcut:
-            # count the (narrow) legs directly — both are bounded by the
-            # merge's blast radius, not the table
-            n_matched = upd.count()
-            n_ins = (ins.count() if self.when_not_matched == "insert" else 0)
-        elif self.when_matched == "update" and self.when_not_matched == "insert":
-            n_matched = n_tgt + n_src - n_out
-            n_ins = n_src - n_matched
-        elif self.when_matched == "delete" and self.when_not_matched == "insert":
-            n_matched = (n_tgt + n_src - n_out) // 2
-            n_ins = n_src - n_matched
-        elif self.when_matched == "delete":
-            n_matched = n_tgt - n_out
-            n_ins = 0
-        else:  # update + ignore: output rows == target rows; count the leg
-            n_matched = upd.count()
-            n_ins = 0
-        n_keep = n_tgt - n_matched
-        summary = {"job": "merge", "matched": n_matched, "inserted": n_ins}
-        if salt:
-            summary["salt-buckets"] = str(salt)
-        cdir = self._write_cdf(tgt, source, upd, ins, cols, pre=pre)
-        if cdir:
-            summary["change-data-dir"] = cdir
-        snap = table.commit_rewrite(
-            [f.path for f in affected], outs, operation="overwrite",
-            summary_extra=summary,
-            starting_sequence_number=(
-                snapshot.sequence_number if snapshot else None),
-        )
-
-        # lineage: per-partition input/output mapping for the audit ledger
-        job_id = f"merge-{snapshot.snapshot_id if snapshot else 0}-{snap.snapshot_id}"
-        ledger = Ledger(table.location, job_id, "merge")
-        by_part_in: dict[str, list[str]] = {}
-        for f in affected:
-            by_part_in.setdefault(partition_key(f.partition), []).append(f.path)
-        by_part_out: dict[str, list[DataFile]] = {}
-        for f in outs:
-            by_part_out.setdefault(partition_key(f.partition), []).append(f)
-        for k in sorted(set(by_part_in) | set(by_part_out)):
-            po = by_part_out.get(k, [])
-            ledger.record_partition(
-                po[0].partition if po else next(
-                    f.partition for f in affected if partition_key(f.partition) == k
-                ),
-                by_part_in.get(k, []),
-                po,
-                rows=sum(f.record_count for f in po),
-                bytes_written=sum(f.file_size_bytes for f in po),
-                spill_bytes=0,
-            )
-        ledger.record_job_done({"snapshot_id": snap.snapshot_id})
-
+        n_matched = matched(counts)
         return MergeResult(
             snapshot_id=snap.snapshot_id,
             files_scoped=len(affected),
@@ -528,8 +486,8 @@ class MergeIntoJob:
             files_written=len(outs),
             rows_updated=n_matched if self.when_matched == "update" else 0,
             rows_deleted=n_matched if self.when_matched == "delete" else 0,
-            rows_inserted=n_ins,
-            rows_copied=n_keep,
+            rows_inserted=counts["inserted"],
+            rows_copied=counts["kept"],
             elapsed_sec=time.time() - t0,
-            spill_bytes=spill_metrics(spark),
         )
+

@@ -30,8 +30,8 @@ from dataclasses import dataclass
 from pyspark.sql import functions as F
 
 from ..format.table import Table
-from .delete import record_rewrite_lineage, write_posdel_files
-from .ledger import spill_metrics
+from .delete import write_posdel_files
+from .rewrite import commit_with_lineage
 
 
 @dataclass
@@ -42,7 +42,6 @@ class RewriteDeletesResult:
     rows_in: int
     rows_out: int
     elapsed_sec: float = 0.0
-    spill_bytes: int = 0
     eq_files_converted: int = 0
     eq_rows_materialized: int = 0
 
@@ -101,19 +100,18 @@ class RewriteDeletesJob:
         if rows_out:
             n_out = max(1, -(-rows_out // self.target_rows_per_file))
             outs = write_posdel_files(table, pruned, n_out)
-        snap = table.commit_rewrite(
-            [d.path for d in dels] + [d.path for d in eqdels], outs,
+        snap = commit_with_lineage(
+            table, dels + eqdels, outs, job="rewrite-deletes",
             operation="replace",
-            summary_extra={
+            summary={
                 "job": "rewrite-deletes",
                 "dv-files-in": len(dels),
                 "dv-files-out": len(outs),
                 "dv-rows-pruned": rows_in - rows_out,
                 "eq-files-converted": len(eqdels),
             },
+            start_seq=None,
         )
-        record_rewrite_lineage(table, "rewrite-deletes", snap,
-                               dels + eqdels, outs)
         return RewriteDeletesResult(
             snapshot_id=snap.snapshot_id,
             dv_files_in=len(dels),
@@ -121,7 +119,6 @@ class RewriteDeletesJob:
             rows_in=rows_in,
             rows_out=rows_out,
             elapsed_sec=time.time() - t0,
-            spill_bytes=spill_metrics(spark),
             eq_files_converted=len(eqdels),
             eq_rows_materialized=n_eq_rows,
         )

@@ -1,9 +1,10 @@
 """UPDATE ... SET ... WHERE — predicate-scoped copy-on-write row update.
 
-The single-statement sibling of MERGE (operators/merge.py) for the common
-"patch rows in place" case Delta users express as ``UPDATE``: no source
-relation, no join — just a predicate and column assignments. Scale shape is
-identical to DELETE (operators/delete.py):
+The single-statement sibling of MERGE for the common "patch rows in place"
+case Delta users express as ``UPDATE``: no source relation, no join — just
+a predicate and column assignments. The rewrite, its row counters and the
+commit are the row-level primitive shared with DELETE and MERGE
+(operators/rewrite.py):
 
 - **write-side pruning**: manifest min/max + partition values + derived xxh64
   bounds (plans/pruning.py) pick the candidate files; everything else is not
@@ -16,6 +17,9 @@ identical to DELETE (operators/delete.py):
   table's layout keys.
 - **atomicity**: staged files + one copy-on-write snapshot; pinned readers
   keep the old snapshot; a pre-commit crash leaves only GC-able orphans.
+- **counters**: ``rows_updated`` and ``rows_copied`` are observed in the
+  write's own Spark job over the masked read, so rows hidden by earlier
+  delete files count in neither.
 
 Assignments are SQL expression strings evaluated against the pre-update row
 (standard UPDATE semantics: all right-hand sides see the OLD values, so
@@ -32,10 +36,11 @@ from typing import Mapping, Sequence
 from pyspark.sql import functions as F
 
 from ..format.table import Table
-from ..format.stats import inputs_carry_key_stats
 from ..plans.pruning import Predicate, prune_files
-from .delete import record_rewrite_lineage
-from .ledger import spill_metrics, split_size_for_rewrites
+from .rewrite import rewrite_rows, start_sequence
+
+# tag column: the row matches the predicate (counted, not written)
+_HIT = "_update_hit"
 
 
 @dataclass
@@ -48,7 +53,6 @@ class UpdateResult:
     rows_updated: int
     rows_copied: int
     elapsed_sec: float = 0.0
-    spill_bytes: int = 0
 
 
 class UpdateJob:
@@ -93,64 +97,55 @@ class UpdateJob:
     def run(self) -> UpdateResult:
         t0 = time.time()
         table = self.table
-        table.refresh()
-        start = table.current_snapshot()
-        start_seq = start.sequence_number if start else None
+        start_seq = start_sequence(table)
         files = table.live_data_files()
         rewrite = prune_files(files, self.predicates, table.schema,
                               table.spec, aliases=table.rename_map())
         n_untouched = len(files) - len(rewrite)
         if not rewrite:
             return UpdateResult(None, len(files), n_untouched, 0, 0, 0, 0,
-                                time.time() - t0, 0)
-        spark = table.spark
+                                time.time() - t0)
         schema = table.schema
-        # capture BEFORE the commit: the rewrite may retire the delete files
-        n_dv_masked = table.deleted_row_count(rewrite)
-        df = table.read_data_files(rewrite)
         pred = (F.coalesce(table._residual(self.predicates), F.lit(False))
                 if self.predicates else F.lit(True))
-        # all right-hand sides evaluate against the OLD row (standard UPDATE):
-        # build every new column from the input df before any replacement
-        updated = df.select(*[
-            F.when(pred, F.expr(self.assignments[c.name]).cast(c.dataType))
-             .otherwise(F.col(c.name)).alias(c.name)
-            if c.name in self.assignments else F.col(c.name)
-            for c in schema.fields
-        ])
-        # narrow metadata-pushdown count of matched rows (predicate only,
-        # affected files only) — no second pass over the rewrite output
-        n_updated = df.filter(pred).count()
-        # Delta CHECK semantics: rewritten output must satisfy declared
-        # constraints (free when none are declared — the probe early-returns)
-        table.check_constraints(updated)
-        cdir = self._write_cdf(df, pred, schema)
-        # map-only rewrite, same shape as DELETE copy-on-write: splits
-        # aligned to the target file size, each scan task applies the
-        # assignments to its own files, locally sorts on the layout keys,
-        # and writes its own outputs — no exchange of the rewritten rows
-        target_size = table.property_int(
-            "write.target-file-size-bytes", 128 * 1024 * 1024)
-        with split_size_for_rewrites(table.spark, target_size):
-            outs = table.write_data_files(
-                updated, n_files=None,
-                sort_within=self.sort_keys or None, job_tag="update",
-                harvest_key_stats=inputs_carry_key_stats(rewrite),
-            )
-        summary = {
-            "job": "update",
-            "predicates": " AND ".join(
-                f"{c} {op} {v!r}" for c, op, v in self.predicates) or "TRUE",
-            "updated-records": n_updated,
-        }
-        if cdir:
-            summary["change-data-dir"] = cdir
-        snap = table.commit_rewrite(
-            [f.path for f in rewrite], outs, operation="overwrite",
-            summary_extra=summary, starting_sequence_number=start_seq,
+        cdir = None
+
+        def transform(df):
+            nonlocal cdir
+            # all right-hand sides evaluate against the OLD row (standard
+            # UPDATE): build every new column from the input df before any
+            # replacement; the match tag feeds the in-write counters
+            updated = df.select(*[
+                F.when(pred, F.expr(self.assignments[c.name]).cast(c.dataType))
+                 .otherwise(F.col(c.name)).alias(c.name)
+                if c.name in self.assignments else F.col(c.name)
+                for c in schema.fields
+            ], pred.alias(_HIT))
+            # Delta CHECK semantics: rewritten output must satisfy declared
+            # constraints (free when none are declared — the probe
+            # early-returns)
+            table.check_constraints(updated.drop(_HIT))
+            cdir = self._write_cdf(df, pred, schema)
+            return updated
+
+        # map-only rewrite: each scan task applies the assignments to its
+        # own files, locally sorts on the layout keys, and writes its own
+        # outputs
+        snap, outs, counts = rewrite_rows(
+            table, rewrite, transform,
+            counters={"updated": F.count_if(F.col(_HIT)),
+                      "rows": F.count(F.lit(1))},
+            job="update", operation="overwrite",
+            summary=lambda n: {
+                "job": "update",
+                "predicates": " AND ".join(
+                    f"{c} {op} {v!r}" for c, op, v in self.predicates) or "TRUE",
+                "updated-records": n["updated"],
+                "change-data-dir": cdir,
+            },
+            sort_keys=self.sort_keys, start_seq=start_seq,
         )
-        record_rewrite_lineage(table, "update", snap, rewrite, outs)
-        n_in = sum(f.record_count for f in rewrite) - n_dv_masked
+        n_updated = counts["updated"]
         return UpdateResult(
             snapshot_id=snap.snapshot_id,
             files_total=len(files),
@@ -158,7 +153,6 @@ class UpdateJob:
             files_rewritten=len(rewrite),
             files_written=len(outs),
             rows_updated=n_updated,
-            rows_copied=n_in - n_updated,
+            rows_copied=counts["rows"] - n_updated,
             elapsed_sec=time.time() - t0,
-            spill_bytes=spill_metrics(spark),
         )

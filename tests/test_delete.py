@@ -7,6 +7,7 @@ from __future__ import annotations
 import datetime
 
 import pytest
+from pyspark.sql import Observation
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -53,8 +54,15 @@ def test_delete_old_days_is_metadata_only(spark, delete_table):
     assert turns(t.scan()) == turns(expected)
 
 
-def test_delete_predicate_straddling_files_rewrites_only_those(spark, delete_table):
+@pytest.mark.parametrize("optimize_write", [None, "true"],
+                         ids=["unset", "optimize-write"])
+def test_delete_predicate_straddling_files_rewrites_only_those(
+        spark, delete_table, optimize_write):
+    """The in-write row count stays exact when an optimized write puts a
+    range exchange (and its sampling job) in front of the write."""
     t, df = delete_table
+    if optimize_write:
+        t.set_property("write.optimize-write.enabled", optimize_write)
     res = DeleteJob(t, [("role", "=", "tool")]).run()
     assert res.rows_deleted == df.filter(F.col("role") == "tool").count()
     assert turns(t.scan()) == turns(df.filter(F.col("role") != "tool"))
@@ -136,13 +144,15 @@ def test_cow_rewrite_plan_is_map_only(spark, delete_table):
     job = DeleteJob(t, [("role", "=", "tool"), ("turn_idx", "<", 6)])
     _untouched, _dropped, rewrite = job.classify()
     assert rewrite, "fixture must produce straddling files"
-    pred = t._residual(job.predicates)
+    hit = F.coalesce(t._residual(job.predicates), F.lit(False))
     with split_size_for_rewrites(spark, 512 * 1024):
-        survivors = t.read_data_files(rewrite).filter(
-            ~F.coalesce(pred, F.lit(False)))
-        # the exact frame write_data_files builds for n_files=None
-        staged = t.spec.with_partition_columns(survivors).sortWithinPartitions(
-            *(t.spec.column_names + job.sort_keys))
+        tagged = t.read_data_files(rewrite).withColumn("_hit", hit)
+        # the frame the rewrite builds for n_files=None: tag, count the
+        # matches in the write pass, drop them, sort locally
+        staged = (t.spec.with_partition_columns(tagged)
+                  .observe(Observation(), F.count_if("_hit").alias("n"))
+                  .filter(~F.col("_hit")).drop("_hit")
+                  .sortWithinPartitions(*(t.spec.column_names + job.sort_keys)))
         plan = staged._jdf.queryExecution().executedPlan().toString()
     assert "Exchange" not in plan, plan
 

@@ -4,6 +4,7 @@ maintenance rewrites, snapshot isolation, GC lifecycle."""
 
 from __future__ import annotations
 
+import datetime
 import os
 
 import pytest
@@ -20,6 +21,7 @@ from e2e_ocsf_cyber_lakehouse_blueprint_spark.operators.delete import DeleteJob
 from e2e_ocsf_cyber_lakehouse_blueprint_spark.operators.expire import ExpireSnapshotsJob
 from e2e_ocsf_cyber_lakehouse_blueprint_spark.operators.merge import MergeIntoJob
 from e2e_ocsf_cyber_lakehouse_blueprint_spark.operators.update import UpdateJob
+from e2e_ocsf_cyber_lakehouse_blueprint_spark.operators.upsert import upsert
 from e2e_ocsf_cyber_lakehouse_blueprint_spark.sources.transcripts import (
     SCHEMA_DDL, generate_transcripts,
 )
@@ -301,3 +303,61 @@ def test_cluster_after_mor_delete_masks_entire_partition(spark, tmp_path):
     ClusteringJob(t, curve="zorder", max_concurrency=4).run()
     assert sorted(tuple(r) for r in t.scan().collect()) == before
     assert t.scan().filter(F.col("conv_id") == hot).count() == 0
+
+
+def mask_rows(t, prior, convs):
+    """Hide rows of ``convs`` from scans without rewriting their files: a
+    merge-on-read DELETE of the first three conversations (positional
+    deletes), or an UPSERT of five turns of the second (an equality delete
+    over the old rows; the new rows land in a new file)."""
+    if prior == "mor-delete":
+        DeleteJob(t, [("conv_id", "in", convs[:3])], mode="merge-on-read").run()
+    else:
+        batch = (t.scan([("conv_id", "=", convs[1])])
+                 .orderBy("turn_idx").limit(5)
+                 .withColumn("text", F.lit("upserted")))
+        upsert(t, batch, ["conv_id", "turn_idx"], n_files=1)
+
+
+def first_convs(df, n=6):
+    return [r[0] for r in df.select("conv_id").distinct()
+            .orderBy("conv_id").limit(n).collect()]
+
+
+@pytest.mark.parametrize("scope", ["straddling", "dropped-whole"])
+@pytest.mark.parametrize("prior", ["mor-delete", "upsert"])
+def test_cow_delete_counts_only_rows_it_removes(spark, dv_table, prior, scope):
+    """Copy-on-write ``rows_deleted`` equals the rows that leave the scan,
+    also when earlier delete files already mask some matched rows — in the
+    files the DELETE rewrites and in the files it drops whole."""
+    t, df = dv_table
+    convs = first_convs(df)
+    mask_rows(t, prior, convs)
+    # day 1 holds all of the second conversation, so both kinds of masks
+    # fall in files this predicate drops whole
+    preds = ([("conv_id", "in", convs)] if scope == "straddling"
+             else [("ts", "<", datetime.datetime(2025, 1, 2))])
+    before = t.scan().count()
+    res = DeleteJob(t, preds, mode="copy-on-write").run()
+    if scope == "straddling":
+        assert res.files_rewritten > 0
+    else:
+        assert res.files_dropped > 0 and res.files_rewritten == 0
+    assert res.rows_deleted == before - t.scan().count()
+
+
+@pytest.mark.parametrize("prior", ["mor-delete", "upsert"])
+def test_update_counts_exclude_masked_rows(spark, dv_table, prior):
+    """UPDATE counts only live rows: updated = the matches a scan sees,
+    copied = the rest of what it rewrote; rows masked by positional or
+    equality deletes count in neither."""
+    t, df = dv_table
+    convs = first_convs(df)
+    mask_rows(t, prior, convs)
+    n = t.scan([("conv_id", "in", convs)]).count()
+    before = {f.path for f in t.live_data_files()}
+    res = UpdateJob(t, [("conv_id", "in", convs)], {"tool": "'edited'"}).run()
+    written = sum(f.record_count for f in t.live_data_files()
+                  if f.path not in before)
+    assert res.rows_updated == n
+    assert res.rows_copied == written - n

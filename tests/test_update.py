@@ -17,12 +17,9 @@ from e2e_ocsf_cyber_lakehouse_blueprint_spark.sources.transcripts import (
 )
 
 
-@pytest.fixture()
-def upd_table(spark, tmp_table_dir):
-    df = generate_transcripts(spark, n_convs=60, hot_convs=1, hot_turns=100,
-                              span_days=6)
+def make_table(spark, loc, df):
     t = Table.create(
-        spark, tmp_table_dir, T.StructType.fromDDL(SCHEMA_DDL),
+        spark, loc, T.StructType.fromDDL(SCHEMA_DDL),
         PartitionSpec.of(days("ts_day", "ts"), bucket("conv_bucket", "conv_id", 2)),
         properties={
             "write.target-file-size-bytes": str(512 * 1024),
@@ -30,15 +27,36 @@ def upd_table(spark, tmp_table_dir):
         },
     )
     t.append(df, n_files=2, sort_within=("conv_id", "turn_idx"))
-    return t, df.cache()
+    return t
 
 
-def test_update_matched_rows_only(spark, upd_table):
+def transcripts(spark):
+    return generate_transcripts(spark, n_convs=60, hot_convs=1, hot_turns=100,
+                                span_days=6)
+
+
+@pytest.fixture()
+def upd_table(spark, tmp_table_dir):
+    df = transcripts(spark)
+    return make_table(spark, tmp_table_dir, df), df.cache()
+
+
+@pytest.mark.parametrize("optimize_write", [None, "true"],
+                         ids=["unset", "optimize-write"])
+def test_update_matched_rows_only(spark, upd_table, optimize_write):
+    """The in-write counters stay exact when an optimized write puts a
+    range exchange (and its sampling job) in front of the write."""
     t, df = upd_table
+    if optimize_write:
+        t.set_property("write.optimize-write.enabled", optimize_write)
+    before = {f.path for f in t.live_data_files()}
     res = UpdateJob(t, [("role", "=", "tool")],
                     {"text": "concat('redacted:', text)"}).run()
     n_tool = df.filter(F.col("role") == "tool").count()
     assert res.rows_updated == n_tool
+    assert res.rows_copied == sum(
+        f.record_count for f in t.live_data_files()
+        if f.path not in before) - n_tool
     after = t.scan()
     assert after.count() == df.count()
     assert after.filter(F.col("text").startswith("redacted:")).count() == n_tool
@@ -115,3 +133,30 @@ def test_update_snapshot_isolation(spark, upd_table):
     old = t.scan(snapshot_id=pinned)
     assert old.filter(F.col("text") == "gone").count() == 0
     assert old.count() == df.count()
+
+
+def test_update_and_delete_launch_the_same_spark_jobs(spark, tmp_path):
+    """UPDATE takes its counters inside the write's own Spark job, like a
+    copy-on-write DELETE: with the same straddling predicate on identical
+    tables (no change feed, no constraints) both launch the same number of
+    jobs."""
+    from e2e_ocsf_cyber_lakehouse_blueprint_spark.operators.delete import DeleteJob
+
+    df = transcripts(spark).cache()
+    pred = [("role", "=", "tool")]
+    sc = spark.sparkContext
+    jobs = {}
+    for name, job in (
+        ("delete", lambda t: DeleteJob(t, pred, mode="copy-on-write")),
+        ("update", lambda t: UpdateJob(t, pred, {"tool": "'x'"})),
+    ):
+        t = make_table(spark, str(tmp_path / name), df)
+        group = f"job-parity-{name}-{tmp_path.name}"
+        sc.setJobGroup(group, name)
+        try:
+            res = job(t).run()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        assert res.files_rewritten > 0
+        jobs[name] = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert jobs["update"] == jobs["delete"] > 0
